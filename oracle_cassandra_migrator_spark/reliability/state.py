@@ -13,6 +13,11 @@ from __future__ import annotations
 import abc
 import glob as globlib
 import os
+import re
+
+# a URI scheme of two or more characters ("file:", "s3a:", "hdfs:");
+# one letter followed by a colon is a drive, not a scheme
+_URI_SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.-]+:")
 
 
 class StateStore(abc.ABC):
@@ -73,8 +78,7 @@ class HadoopFSStateStore(StateStore):
     ``s3a:/``, ``gs:/``, ``abfs:/`` — resolved per-key from the active
     Hadoop configuration. This is the production default for pipelines
     whose staging/sink paths are object-store URIs (the reference's
-    boto3 layer, generalized); S3StateStore remains the faithful
-    boto3-call-shape analog."""
+    boto3 layer, generalized)."""
 
     def __init__(self, spark):
         self._jvm = spark._jvm
@@ -109,53 +113,11 @@ class HadoopFSStateStore(StateStore):
         fs.delete(path, False)
 
 
-class S3StateStore(StateStore):
-    """S3 marker store — the reference's coordination layer
-    (boto3 ``list_objects_v2`` pagination at
-    verizon_table_migration_Rakesh_filters.py:279-300, existence checks
-    at :156-184, zero-byte checkpoint objects at :237-276) behind the
-    same StateStore interface as the local-FS implementation.
-
-    Keys are ``s3://bucket/key`` URLs. boto3 is imported lazily; this
-    environment has no S3, so only LocalFSStateStore is exercised by
-    tests — the call shapes here mirror the reference exactly.
-    """
-
-    def __init__(self, client=None):
-        if client is None:
-            import boto3  # deferred: not installed in the test env
-
-            client = boto3.client("s3")
-        self.client = client
-
-    @staticmethod
-    def _split(url: str) -> tuple[str, str]:
-        without = url.removeprefix("s3://").removeprefix("s3a://")
-        bucket, _, key = without.partition("/")
-        return bucket, key
-
-    def exists(self, key: str) -> bool:
-        bucket, obj = self._split(key)
-        try:
-            self.client.head_object(Bucket=bucket, Key=obj)
-            return True
-        except self.client.exceptions.ClientError:
-            return False
-
-    def put_marker(self, key: str) -> None:
-        bucket, obj = self._split(key)
-        self.client.put_object(Bucket=bucket, Key=obj, Body=b"")
-
-    def list(self, prefix: str, suffix: str = "") -> list[str]:
-        bucket, obj_prefix = self._split(prefix)
-        paginator = self.client.get_paginator("list_objects_v2")
-        out: list[str] = []
-        for page in paginator.paginate(Bucket=bucket, Prefix=obj_prefix):
-            for entry in page.get("Contents", []):
-                if entry["Key"].endswith(suffix):
-                    out.append(f"s3://{bucket}/{entry['Key']}")
-        return sorted(out)
-
-    def delete(self, key: str) -> None:
-        bucket, obj = self._split(key)
-        self.client.delete_object(Bucket=bucket, Key=obj)
+def default_store(spark, path: str) -> StateStore:
+    """The store used when a caller passes none: ``HadoopFSStateStore``
+    for a scheme-qualified ``path`` (``file:``, ``hdfs:``, ``s3a:``),
+    whose markers the local store cannot see, and ``LocalFSStateStore``
+    for a plain local path."""
+    if _URI_SCHEME.match(path):
+        return HadoopFSStateStore(spark)
+    return LocalFSStateStore()

@@ -43,17 +43,15 @@ design (bucketing them measured 620 tiny files per 1000-row trigger),
 so the probe's append term is bounded by compaction cadence, not a
 constant; and the bound assumes roughly uniform id hashing.
 
-Exactly-once: the upsert/rollup marker protocol plus the content
-fingerprint ledger (``streaming/fingerprint.py``) over the (id, vec)
-projection — true replays of a committed batch are skipped exactly,
+Exactly-once: the versioned-sink protocol in ``streaming/fingerprint.py``
+with the content fingerprint taken over the (id, vec) projection —
+true replays of a committed batch are skipped exactly,
 fresh-checkpoint runs reusing a committed id with different content
 are refused loudly, and a stale id whose marker was vacuumed is
 skipped (true replay: its rows live on in every later rebuild) or
 refused (new content — the write would be invisible to ``read_index``
-and reclaimed by the next vacuum). The marker->fingerprint crash
-window degrades that id to legacy silent-skip, same residual hole,
-same no-heal rationale as the other four state sinks (see
-streaming/neardedup.py's marker-hit comment).
+and reclaimed by the next vacuum). A legacy (ledger-less) id below
+the latest commit is skipped, never rewritten (``skip_legacy``).
 """
 
 from __future__ import annotations
@@ -67,11 +65,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from oracle_cassandra_migrator_spark.operators import similarity
 from oracle_cassandra_migrator_spark.reliability.state import (
-    LocalFSStateStore,
     StateStore,
+    default_store,
 )
 from oracle_cassandra_migrator_spark.streaming import fingerprint
-from oracle_cassandra_migrator_spark.streaming.upsert import _committed_ids
 
 __all__ = [
     "foreach_batch_ann_maintain",
@@ -201,10 +198,8 @@ def read_sidecar(spark, base_dir: str, batch_id) -> dict:
     like the partitioned sink's manifests — deliberately NOT through a
     StateStore (review r11: an unused store parameter here implied a
     pluggability the body never honored)."""
-    from oracle_cassandra_migrator_spark.streaming.partitioned import (
-        _read_text)
-
-    side = json.loads(_read_text(spark, _sidecar_key(base_dir, batch_id)))
+    side = json.loads(
+        fingerprint.read_text(spark, _sidecar_key(base_dir, batch_id)))
     side["base_sums"] = {int(k): v for k, v in side["base_sums"].items()}
     return side
 
@@ -244,8 +239,8 @@ def read_index(spark, base_dir: str,
     ``_idb=<b>`` leaf dirs directly, so the bucket column never
     appears in the returned schema; pre-bucket generations keep the
     flat whole-dir read."""
-    store = state or LocalFSStateStore()
-    ids = _committed_ids(store, posixpath.join(base_dir, "markers"))
+    ids = fingerprint.committed_ids(
+        state or default_store(spark, base_dir), base_dir)
     if not ids:
         return None
     side = read_sidecar(spark, base_dir, ids[-1])
@@ -349,79 +344,23 @@ def foreach_batch_ann_maintain(
             f"(got {algo!r})")
     opts = dict(algo_opts, vec_col=vec_col, id_col=id_col)
     alg = _IvfAlgo(opts) if algo == "ivf" else _PqAlgo(opts)
-    store = state or LocalFSStateStore()
-    marker_dir = posixpath.join(base_dir, "markers")
+    store = state or default_store(stream.sparkSession, base_dir)
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        # persist ACROSS the fingerprint aggregate and the encode/
-        # train consumption — the single-execution discipline of the
-        # other state sinks (tests/test_fingerprint_scan_once.py)
-        batch_df = batch_df.persist()
-        try:
-            _apply_once(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _apply_once(batch_df: DataFrame, batch_id: int) -> None:
+    def write(batch_df: DataFrame, token: str, tokens: list[str]) -> bool:
         spark = batch_df.sparkSession
-        marker = posixpath.join(marker_dir, f"batch-{batch_id}.marker")
-        # fingerprint the SEMANTIC projection (id, vec) only — payload
-        # columns the sink ignores must not flip a replay into a
-        # collision; also the required batch consumption on skip paths
-        fp = fingerprint.batch_fingerprint(
-            batch_df.select(id_col, vec_col))
-        if store.exists(marker):
-            fingerprint.decide_replay(
-                spark, store, base_dir, batch_id, fp,
-                f"batch {batch_id} carries a committed marker at "
-                f"{base_dir!r} but its content fingerprint does not "
-                "match the committed one — a fresh-checkpoint run is "
-                "reusing a committed batch id over the same base_dir, "
-                "and skipping it would silently drop its appends. "
-                "Resume the original checkpoint, use a new base_dir, "
-                "or clear the state first.")
-            return
-        committed = _committed_ids(store, marker_dir)
-        if committed and batch_id < committed[-1]:
-            # A write below the latest committed id is junk in either
-            # shape: below the rebuild it is INVISIBLE to read_index
-            # stitching and reclaimed by the next vacuum; BETWEEN the
-            # rebuild and committed[-1] (non-contiguous markers above
-            # the rebuild — abnormal state) it WOULD be stitched while
-            # its rows were never folded into later sidecars' carried
-            # sums, silently corrupting the drift gate. decide_replay
-            # skips a vacuumed-marker true replay exactly (its rows
-            # live on in every later rebuild) and refuses new content;
-            # the legacy fall-through (pre-ledger / crash-window
-            # markers) is preserved as a skip in BOTH shapes (ADVICE
-            # r11: the old path only skipped legacy when NO committed
-            # id was below batch_id, letting a rebuild_id < batch_id <
-            # committed[-1] legacy write through to a full commit).
-            fingerprint.decide_replay(
-                spark, store, base_dir, batch_id, fp,
-                f"ANN index state at {base_dir!r} is committed "
-                f"through batch {committed[-1]}, but this stream "
-                f"is writing batch {batch_id} with DIFFERENT "
-                "content than originally committed there — a "
-                "fresh-checkpoint run over the same base_dir. Its "
-                "version would either be invisible to readers and "
-                "reclaimed by the next vacuum, or stitched without "
-                "being folded into later drift sums (silent data "
-                "loss/corruption either way). Resume the original "
-                "checkpoint, use a new base_dir, or clear the state "
-                "first.")
-            return
+        batch_id = int(token)
+        committed = [int(t) for t in tokens]
         appended = batch_df.select(id_col, vec_col)
         if not committed:
             # bootstrap: the index is born from the stream itself.
             # An EMPTY first batch commits nothing (the next batch
-            # bootstraps; the fp aggregate above already consumed it)
+            # bootstraps; the protocol's fp aggregate already consumed it)
             # instead of wedging the stream on an untrainable batch
             # (review r11: codebook_literal_expr raises on an empty
             # codebook, and Spark re-delivers batch 0 forever)
             n_app = appended.count()
             if n_app == 0:
-                return
+                return False
             codebook = _train_or_fallback(alg, appended)
             encoded = alg.encode(appended, codebook)
             side = {
@@ -432,9 +371,8 @@ def foreach_batch_ann_maintain(
                 "n_rows": n_app,
                 "n_buckets": _n_buckets_for(n_app),
             }
-            _commit(spark, encoded, side, batch_id, marker, fp,
-                    bucketed=True)
-            return
+            _write_version(spark, encoded, side, batch_id, bucketed=True)
+            return True
         # Past the guards, batch_id > committed[-1] (== would have hit
         # the marker branch), so the latest committed version is the
         # carry base.
@@ -483,8 +421,8 @@ def foreach_batch_ann_maintain(
                 }
                 _carry_ledger(new_side, side, n_app)
                 encoded = alg.encode(appended, codebook).limit(0)
-                _commit(spark, encoded, new_side, batch_id, marker, fp)
-                return
+                _write_version(spark, encoded, new_side, batch_id)
+                return True
             batch_sums = similarity.embedding_dim_sums_micro(
                 appended, vec_col)
             drift = similarity.centroid_drift_from_sums(
@@ -530,10 +468,11 @@ def foreach_batch_ann_maintain(
                     "n_rows": total,
                     "n_buckets": _n_buckets_for(total),
                 }
-                _commit(spark, encoded, new_side, batch_id, marker, fp,
-                        bucketed=True)
-                return
-            _commit(spark, encoded, new_side, batch_id, marker, fp)
+                _write_version(spark, encoded, new_side, batch_id,
+                               bucketed=True)
+                return True
+            _write_version(spark, encoded, new_side, batch_id)
+            return True
         finally:
             appended.unpersist()
 
@@ -552,11 +491,8 @@ def foreach_batch_ann_maintain(
         if side.get("n_rows") is not None:
             new_side["n_rows"] = side["n_rows"] + n_app
 
-    def _commit(spark, encoded: DataFrame, side: dict, batch_id,
-                marker: str, fp: str, bucketed: bool = False) -> None:
-        from oracle_cassandra_migrator_spark.streaming.partitioned import (
-            _write_text)
-
+    def _write_version(spark, encoded: DataFrame, side: dict, batch_id,
+                       bucketed: bool = False) -> None:
         out_dir = _index_dir(base_dir, batch_id)
         if bucketed:
             # rebuild/bootstrap only: one O(|version|) shuffle
@@ -577,16 +513,27 @@ def foreach_batch_ann_maintain(
                 str(batch_id): _owned_buckets(spark, out_dir)}
         else:
             encoded.write.mode("overwrite").parquet(out_dir)
-        _write_text(spark, _sidecar_key(base_dir, batch_id),
-                    json.dumps(side))
-        store.put_marker(marker)
-        # fingerprint LAST: presence proves the marker committed
-        store.put_marker(fingerprint.fp_key(base_dir, batch_id, fp))
+        fingerprint.write_text(spark, _sidecar_key(base_dir, batch_id),
+                               json.dumps(side))
 
-    writer = (stream.writeStream.foreachBatch(apply)
-              .option("checkpointLocation", checkpoint_dir))
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    def skip_legacy(batch_df: DataFrame, token: str,
+                    at_marker: bool) -> bool:
+        # A legacy write below the latest committed id is junk in
+        # either shape: below the rebuild it is INVISIBLE to read_index
+        # stitching and reclaimed by the next vacuum; BETWEEN the
+        # rebuild and the latest id (non-contiguous markers above the
+        # rebuild — abnormal state) it WOULD be stitched while its rows
+        # were never folded into later sidecars' carried sums, silently
+        # corrupting the drift gate. So a legacy (pre-ledger /
+        # crash-window) id is skipped in BOTH shapes.
+        return False
+
+    apply = fingerprint.versioned_applier(
+        base_dir, store, write,
+        lambda batch_df: fingerprint.batch_fingerprint(
+            batch_df.select(id_col, vec_col)),
+        on_legacy=skip_legacy)
+    return fingerprint.start(stream, apply, checkpoint_dir, trigger)
 
 
 def vacuum_ann_index(spark, base_dir: str,
@@ -604,30 +551,22 @@ def vacuum_ann_index(spark, base_dir: str,
     readers (a snapshot_at analog) over ann versions. Fingerprints of
     vacuumed batches are merged into one manifest, not deleted — they
     are what lets a vacuumed-marker replay be skipped exactly."""
-    store = state or LocalFSStateStore()
-    marker_dir = posixpath.join(base_dir, "markers")
-    ids = _committed_ids(store, marker_dir)
+    store = state or default_store(spark, base_dir)
+    ids = fingerprint.committed_ids(store, base_dir)
     if not ids:
         return []
     rebuild = read_sidecar(spark, base_dir, ids[-1])["rebuild_id"]
     doomed = [i for i in ids if i < rebuild]
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
     for bid in doomed:
         # data dir AND sidecar go through the Hadoop FS API — sidecars
-        # are WRITTEN via _write_text (deliberately not through a
+        # are WRITTEN via write_text (deliberately not through a
         # StateStore, see read_sidecar), so deleting them via
         # store.delete would silently leak them under a
         # non-filesystem StateStore (ADVICE r11). Only markers (and
         # the fingerprint ledger) live in the store.
-        for target in (_index_dir(base_dir, bid),
-                       _sidecar_key(base_dir, bid)):
-            path = jvm.org.apache.hadoop.fs.Path(target)
-            fs = path.getFileSystem(conf)
-            if fs.exists(path):
-                fs.delete(path, True)
-        store.delete(posixpath.join(marker_dir, f"batch-{bid}.marker"))
+        fingerprint.delete_tree(spark, _index_dir(base_dir, bid))
+        fingerprint.delete_tree(spark, _sidecar_key(base_dir, bid))
+        store.delete(fingerprint.marker_key(base_dir, bid))
     if doomed:
         fingerprint.compact_fingerprints(
             spark, store, base_dir,

@@ -39,8 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from oracle_cassandra_migrator_spark.reliability.state import (
-    LocalFSStateStore,
     StateStore,
+    default_store,
 )
 from oracle_cassandra_migrator_spark.streaming.sinks import (
     consume_without_writing,
@@ -105,7 +105,7 @@ def refreshing_enrich_sink(
     table); each batch then observes every dim update committed before
     that batch started, the standard slowly-changing-dimension
     enrichment contract."""
-    store = state or LocalFSStateStore()
+    store = state or default_store(stream.sparkSession, marker_dir)
     write = make_idempotent_writer(sink_spec, marker_dir, store)
 
     def enrich_and_write(batch_df: DataFrame, batch_id: int) -> None:

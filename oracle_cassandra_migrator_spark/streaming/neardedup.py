@@ -25,11 +25,9 @@ Semantics (documented, deliberately admission-style):
   exactly the one ``dedup_minhash_estimate_audit`` pins in batch.
 
 State layout under ``base_dir`` (both append-only parquet, committed
-with the same marker-per-batch exactly-once discipline as
-``streaming/upsert.py`` — replays of a committed batch are no-ops,
-decided EXACTLY by a per-batch content fingerprint ledger under
-``fingerprints/``: zero-byte ``fp-<id>-<fp>.marker`` singles, merged
-into one JSON manifest per vacuum):
+by the versioned-sink protocol in ``streaming/fingerprint.py`` —
+replays of a committed batch are no-ops, decided EXACTLY by its
+per-batch content fingerprint ledger):
 - ``sigs``:  (doc_id, m0..m{k-1}, n_sh) — one row per admitted doc.
 - ``bands``: (doc_id, band_idx, band_key) — the LSH index the probe
   side equi-joins. The probe's scale shape: the micro-batch side is
@@ -71,10 +69,14 @@ from oracle_cassandra_migrator_spark.operators.dedup import (
     with_shingles,
 )
 from oracle_cassandra_migrator_spark.reliability.state import (
-    LocalFSStateStore,
     StateStore,
+    default_store,
 )
 from oracle_cassandra_migrator_spark.streaming import fingerprint
+from oracle_cassandra_migrator_spark.streaming.fingerprint import (
+    committed_tokens,
+    token_key,
+)
 
 K = LSH_BANDS * LSH_ROWS
 
@@ -254,8 +256,8 @@ def _batch_fingerprint(batch_df: DataFrame, text_col: str,
     return fingerprint.batch_fingerprint(batch_df, [id_col, text_col])
 
 
-# module-local alias: the gate's tests build ledger keys through it
-_fp_key = fingerprint.fp_key
+def _latest_compaction(tokens: list[str]) -> str | None:
+    return next((t for t in reversed(tokens) if "c" in t), None)
 
 
 def _live_tokens(store: StateStore, marker_dir: str) -> list[str]:
@@ -267,15 +269,9 @@ def _live_tokens(store: StateStore, marker_dir: str) -> list[str]:
     future micro-batch's id). A compaction REWRITES everything
     committed at or before it, so the live set is the latest
     compaction (if any) plus every later stream batch."""
-    from oracle_cassandra_migrator_spark.streaming.partitioned import (
-        _committed_tokens)
-
-    tokens = _committed_tokens(store, marker_dir)
-    last_c = None
-    for i, t in enumerate(tokens):
-        if "c" in t:
-            last_c = i
-    return tokens if last_c is None else tokens[last_c:]
+    tokens = committed_tokens(store, marker_dir)
+    last_c = _latest_compaction(tokens)
+    return tokens if last_c is None else tokens[tokens.index(last_c):]
 
 
 def read_state(spark, base_dir: str, state: StateStore | None = None):
@@ -284,8 +280,8 @@ def read_state(spark, base_dir: str, state: StateStore | None = None):
     batch's marker exists; a crash between append and marker leaves
     orphan part-files in versioned subdirs that are never listed.
     Versions superseded by a compaction are not stitched."""
-    store = state or LocalFSStateStore()
-    tokens = _live_tokens(store, posixpath.join(base_dir, "markers"))
+    tokens = _live_tokens(state or default_store(spark, base_dir),
+                          posixpath.join(base_dir, "markers"))
     if not tokens:
         return None, None
     sig_dirs = [posixpath.join(base_dir, f"sigs-v{t}") for t in tokens]
@@ -312,122 +308,20 @@ def foreach_batch_near_dedup(
     marker-committed — replays of a committed batchId are no-ops, and
     an uncommitted crash leaves only invisible orphan versions.
 
-    Exactly-once ledger: alongside the marker, each committed batch
-    records a zero-byte content FINGERPRINT
-    (``fingerprints/fp-<id>-<fp>.marker``, written AFTER the marker so
-    its presence proves full commit). Replay vs fresh-checkpoint
-    collision is decided by fingerprint EQUALITY — exact, never by the
+    Exactly-once ledger (``streaming/fingerprint.py``, over the
+    (id, text) projection): replay vs fresh-checkpoint collision is
+    decided by fingerprint EQUALITY — exact, never by the
     band-cap-dependent "re-execution admits nothing" heuristic: a true
     replay (same id, same content) is skipped even when the state's
     band groups have since crossed ``max_band_size``; a reused id with
-    different content is refused loudly. Fingerprint singles are
-    merged into one JSON manifest per vacuum, so the ledger's file
-    count is bounded by the maintenance cadence, not the batch
-    cadence."""
-    store = state or LocalFSStateStore()
-    marker_dir = posixpath.join(base_dir, "markers")
+    different content is refused loudly. A version is hidden only
+    below the latest compaction (every later version is stitched by
+    ``read_state``), and only a batch with no ledger entry falls back
+    to the heuristic."""
+    store = state or default_store(stream.sparkSession, base_dir)
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        # persist ACROSS the fingerprint aggregate and admission: the
-        # fp job materializes the cache, so admit_batch (and the
-        # legacy-path re-execution) reads the cached batch instead of
-        # re-running the source scan + upstream transforms (ADVICE
-        # r10; pinned by tests/test_fingerprint_scan_once.py)
-        batch_df = batch_df.persist()
-        try:
-            _apply_once(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _apply_once(batch_df: DataFrame, batch_id: int) -> None:
-        from oracle_cassandra_migrator_spark.streaming.partitioned import (
-            _committed_tokens, _token_key)
-
-        marker = posixpath.join(marker_dir, f"batch-{batch_id}.marker")
-        spark = batch_df.sparkSession
-        # one small aggregate job — also Spark's required batch
-        # consumption on every early-return path below
-        fp = _batch_fingerprint(batch_df, text_col, id_col)
-        fp_key = _fp_key(base_dir, batch_id, fp)
-        if store.exists(marker):
-            # Committed-marker hit. Blindly skipping would silently
-            # swallow a FRESH-CHECKPOINT run whose batch id collides
-            # with a not-yet-vacuumed marker (self-review r10);
-            # re-executing admission and refusing on non-empty
-            # admissions misreads a legitimate replay whenever a band
-            # group crossed the cap after commit (review r10). The
-            # fingerprint decides EXACTLY:
-            decision = fingerprint.decide_replay(
-                spark, store, base_dir, batch_id, fp,
-                f"batch {batch_id} carries a committed marker at "
-                f"{base_dir!r} but its content fingerprint does not "
-                "match the committed one — a fresh-checkpoint run is "
-                "reusing a committed batch id over the same base_dir, "
-                "and skipping it would silently drop its admissions. "
-                "Resume the original checkpoint, use a new base_dir, "
-                "or clear the state first.")
-            if decision == "skip":
-                return  # true replay of the committed content — no-op
-            # Legacy marker (pre-fingerprint state, or a crash in the
-            # marker->fingerprint window): fall back to the
-            # re-execution heuristic. Deliberately NO ledger heal:
-            # "admits nothing" does not prove content equality (a
-            # colliding batch whose docs all estimate as near-dups of
-            # the state also admits nothing), so recording the
-            # CURRENT batch's fingerprint could poison the ledger and
-            # wedge the original checkpoint's later true replay
-            # (review r10).
-            sigs0, bands0 = read_state(spark, base_dir, store)
-            replay_sigs, _ = admit_batch(
-                batch_df, sigs0, bands0, text_col, id_col, n,
-                threshold, max_band_size)
-            if replay_sigs.limit(1).count() > 0:
-                raise RuntimeError(
-                    f"batch {batch_id} carries a committed marker at "
-                    f"{base_dir!r} but admits NEW docs — a "
-                    "fresh-checkpoint run is reusing a committed "
-                    "batch id over the same base_dir, and skipping it "
-                    "would silently drop its admissions. Resume the "
-                    "original checkpoint, use a new base_dir, or "
-                    "clear the state first.")
-            return
-        # Liveness guard (ADVICE r9, medium): a version whose token
-        # sorts below the latest compaction is INVISIBLE to
-        # _live_tokens stitching and reclaimed by the next vacuum. A
-        # marker-vacuumed REPLAY landing there is safe; a
-        # FRESH-checkpoint run over the same base_dir restarts batch
-        # ids at 0, and its batches carry NEW admissions that would
-        # commit below the compaction token and silently vanish.
-        compactions = [t for t in _committed_tokens(store, marker_dir)
-                       if "c" in t]
-        below_compaction = bool(compactions) and (
-            _token_key(str(batch_id)) < _token_key(compactions[-1]))
-        if below_compaction:
-            # marker vacuumed. The ledger decides (review r10 — this
-            # was the one decision point still resting on the
-            # admits-nothing heuristic): an exact fingerprint match
-            # proves this content was committed before the compaction
-            # — true replay, write NOTHING (the admissions live on in
-            # the compacted state); a differing current-version entry
-            # is a fresh-checkpoint collision — refuse BEFORE the
-            # heuristic can silently commit an invisible empty
-            # version and poison the ledger with the colliding fp;
-            # only a truly pre-ledger id falls through to the
-            # admits-nothing last-ditch guard below.
-            if fingerprint.decide_replay(
-                    spark, store, base_dir, batch_id, fp,
-                    f"near-dedup state at {base_dir!r} was compacted "
-                    f"at token {compactions[-1]!r}, but batch "
-                    f"{batch_id} re-delivers DIFFERENT content than "
-                    "was committed at this id — a fresh-checkpoint "
-                    "run over an already-compacted base_dir. Its "
-                    "versions would be invisible to reads and "
-                    "reclaimed by the next vacuum (silent data "
-                    "loss). Resume the original checkpoint, point "
-                    "this run at a new base_dir, or clear the state "
-                    "first.") == "skip":
-                return
-        sigs, bands = read_state(spark, base_dir, store)
+    def admit(batch_df: DataFrame):
+        sigs, bands = read_state(batch_df.sparkSession, base_dir, store)
         adm_sigs, adm_bands = admit_batch(
             batch_df, sigs, bands, text_col, id_col, n, threshold,
             max_band_size)
@@ -435,43 +329,62 @@ def foreach_batch_near_dedup(
         # appends); persist it so the signature aggregation, the
         # intra-batch LSH self-join, and the state probe run ONCE per
         # micro-batch, mirroring _partitioned_applier's discipline
-        adm_sigs.persist()
+        return adm_sigs.persist(), adm_bands
+
+    def write_version(adm_sigs: DataFrame, adm_bands: DataFrame,
+                      token: str) -> None:
+        adm_sigs.write.mode("overwrite").parquet(
+            posixpath.join(base_dir, f"sigs-v{token}"))
+        adm_bands.write.mode("overwrite").parquet(
+            posixpath.join(base_dir, f"bands-v{token}"))
+
+    def write(batch_df: DataFrame, token: str,
+              committed: list[str]) -> bool:
+        adm_sigs, adm_bands = admit(batch_df)
         try:
-            if below_compaction and adm_sigs.limit(1).count() > 0:
-                raise RuntimeError(
-                    f"near-dedup state at {base_dir!r} was compacted "
-                    f"at token {compactions[-1]!r}, but this stream "
-                    f"is writing batch {batch_id} with NON-EMPTY "
-                    "admissions below it — a fresh-checkpoint run "
-                    "over an already-compacted base_dir. Its versions "
-                    "would be invisible to reads and reclaimed by the "
-                    "next vacuum (silent data loss). Resume the "
-                    "original checkpoint, point this run at a new "
-                    "base_dir, or clear the state first.")
-            adm_sigs.write.mode("overwrite").parquet(
-                posixpath.join(base_dir, f"sigs-v{batch_id}"))
-            adm_bands.write.mode("overwrite").parquet(
-                posixpath.join(base_dir, f"bands-v{batch_id}"))
-            store.put_marker(marker)
-            # fingerprint LAST: its presence proves the marker (and
-            # therefore the data) committed — the invariant the
-            # below_compaction fast path above relies on. A crash in
-            # the marker->fingerprint window degrades that batch id
-            # to the legacy heuristic permanently (no heal: see the
-            # marker-hit comment). Below the compaction, NO fp is
-            # recorded either: that write is a legacy-path empty
-            # version whose content equality is unproven — recording
-            # the delivered fp there could poison the ledger exactly
-            # like the removed heal.
-            if not below_compaction:
-                store.put_marker(fp_key)
+            write_version(adm_sigs, adm_bands, token)
         finally:
             adm_sigs.unpersist()
+        return True
 
-    writer = (stream.writeStream.foreachBatch(apply)
-              .option("checkpointLocation", checkpoint_dir))
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    def admits_nothing(batch_df: DataFrame, token: str,
+                       at_marker: bool) -> bool:
+        # Legacy batch (pre-fingerprint state, or a crash in the
+        # marker->fingerprint window): fall back to the re-execution
+        # heuristic — a true replay admits nothing. Deliberately NO
+        # ledger heal: "admits nothing" does not prove content equality
+        # (a colliding batch whose docs all estimate as near-dups of
+        # the state also admits nothing), so recording the CURRENT
+        # batch's fingerprint could poison the ledger and wedge the
+        # original checkpoint's later true replay.
+        adm_sigs, adm_bands = admit(batch_df)
+        try:
+            if adm_sigs.limit(1).count() > 0:
+                where = ("carries a committed marker" if at_marker else
+                         "sorts below the latest compacted token")
+                raise RuntimeError(
+                    f"batch {token} at {base_dir!r} {where} but admits "
+                    "NEW docs — a fresh-checkpoint run is reusing a "
+                    "committed batch id over the same base_dir, and "
+                    "taking it for a replay would silently lose its "
+                    "admissions. Resume the original checkpoint, use a "
+                    "new base_dir, or clear the state first.")
+            if not at_marker:
+                # below the compaction: commit the (empty) version but
+                # record NO fingerprint — its content equality is
+                # unproven, and recording the delivered fp could poison
+                # the ledger exactly like the heal above
+                write_version(adm_sigs, adm_bands, token)
+                fingerprint.commit(store, base_dir, token, None)
+        finally:
+            adm_sigs.unpersist()
+        return False
+
+    apply = fingerprint.versioned_applier(
+        base_dir, store, write,
+        lambda batch_df: _batch_fingerprint(batch_df, text_col, id_col),
+        _latest_compaction, admits_nothing)
+    return fingerprint.start(stream, apply, checkpoint_dir, trigger)
 
 
 def compact_near_dedup(spark, base_dir: str,
@@ -495,16 +408,13 @@ def compact_near_dedup(spark, base_dir: str,
     a doc_id/band_key repartition, so K versions x P files collapse to
     a handful sized by the data. Returns the new token; run
     ``vacuum_near_dedup`` after to reclaim superseded versions."""
-    from oracle_cassandra_migrator_spark.streaming.partitioned import (
-        _committed_tokens, _token_key)
-
-    store = state or LocalFSStateStore()
+    store = state or default_store(spark, base_dir)
     marker_dir = posixpath.join(base_dir, "markers")
-    tokens = _committed_tokens(store, marker_dir)
+    tokens = committed_tokens(store, marker_dir)
     if not tokens:
         raise ValueError("nothing to compact: no committed versions")
     live = _live_tokens(store, marker_dir)
-    base, suf = _token_key(tokens[-1])
+    base, suf = token_key(tokens[-1])
     new_token = f"{base}c{suf + 1}"
     sigs = spark.read.parquet(
         *[posixpath.join(base_dir, f"sigs-v{t}") for t in live])
@@ -514,8 +424,7 @@ def compact_near_dedup(spark, base_dir: str,
      .parquet(posixpath.join(base_dir, f"sigs-v{new_token}")))
     (bands.repartition("band_key").write.mode("overwrite")
      .parquet(posixpath.join(base_dir, f"bands-v{new_token}")))
-    store.put_marker(
-        posixpath.join(marker_dir, f"batch-{new_token}.marker"))
+    store.put_marker(fingerprint.marker_key(base_dir, new_token))
     return new_token
 
 
@@ -554,28 +463,21 @@ def vacuum_near_dedup(spark, base_dir: str,
     never losses; a truncated manifest is skipped by readers and
     re-merged next vacuum). Zero-byte singles above the compaction
     stay O(batches-since-maintenance)."""
-    from oracle_cassandra_migrator_spark.streaming.partitioned import (
-        _committed_tokens, _hadoop_fs, _token_key)
-
-    store = state or LocalFSStateStore()
+    store = state or default_store(spark, base_dir)
     marker_dir = posixpath.join(base_dir, "markers")
-    tokens = _committed_tokens(store, marker_dir)
+    tokens = committed_tokens(store, marker_dir)
     live = set(_live_tokens(store, marker_dir))
     doomed = [t for t in tokens if t not in live]
     for tok in doomed:
-        store.delete(
-            posixpath.join(marker_dir, f"batch-{tok}.marker"))
+        store.delete(fingerprint.marker_key(base_dir, tok))
         for prefix in ("sigs", "bands"):
-            fs, jd = _hadoop_fs(
+            fingerprint.delete_tree(
                 spark, posixpath.join(base_dir, f"{prefix}-v{tok}"))
-            if fs.exists(jd):
-                fs.delete(jd, True)
     # Fingerprint-ledger compaction: singles below the latest
     # compaction token + all prior manifests -> one manifest.
-    compactions = [t for t in tokens if "c" in t]
-    if compactions:
-        ctoken = compactions[-1]
+    ctoken = _latest_compaction(tokens)
+    if ctoken is not None:
         fingerprint.compact_fingerprints(
             spark, store, base_dir,
-            lambda bid: _token_key(bid) < _token_key(ctoken), ctoken)
+            lambda bid: token_key(bid) < token_key(ctoken), ctoken)
     return doomed

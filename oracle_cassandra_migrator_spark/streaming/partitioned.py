@@ -27,39 +27,25 @@ Layout under ``base_dir`` (any Hadoop scheme):
   no rewrite of untouched buckets), while a column re-appearing with
   a DIFFERENT type aborts the batch before any file lands. Manifests
   predating the field fall back to parquet inference.
-- ``markers/batch-<token>.marker`` — the commit point (the
-  upsert/rollup protocol; a manifest without its marker is an
-  invisible orphan).
+- ``markers/batch-<token>.marker`` — the commit point (a manifest
+  without its marker is an invisible orphan).
 
-VERSION TOKENS: stream batches commit as their Spark batch id
-(``"7"``), so a replayed batch deterministically overwrites its own
-version — the property the rollup's non-idempotent delta merge needs.
-Compactions commit as ``"<base>c<k>"`` (e.g. ``"7c1"``), which sorts
-AFTER stream batch 7 and BEFORE batch 8: compaction never consumes a
-future stream batch id, so a post-compaction micro-batch can never be
-mistaken for a replay (that collision would silently discard data).
+Stream batches commit as their Spark batch id (``"7"``), so a
+replayed batch deterministically overwrites its own version — the
+property the rollup's non-idempotent delta merge needs. Compactions
+commit as ``"<base>c<k>"`` (e.g. ``"7c1"``), which sorts AFTER stream
+batch 7 and BEFORE batch 8: compaction never consumes a future stream
+batch id, so a post-compaction micro-batch can never be mistaken for
+a replay (that collision would silently discard data).
 
-Crash/replay analysis is upsert's, extended to the manifest: version
-dir and manifest are written BEFORE the marker, replays
-deterministically overwrite both, and readers resolve only committed
-manifests. Read amplification (latest snapshot stitches buckets from
-several versions) is bounded by ``compact_partitioned``; vacuum
-deletes marker FIRST, then manifest, then data — a crash mid-vacuum
-leaves invisible orphans, never a committed id whose manifest is
-gone. Reusing a base_dir with a FRESH checkpoint is refused LOUDLY,
-not silently swallowed: Spark restarts batch ids at 0, and the
-per-batch content-fingerprint ledger (``streaming/fingerprint.py``)
-distinguishes a true replay (same content — skipped exactly) from a
-colliding new run (different content — RuntimeError), both under a
-still-committed marker and at a stale id whose marker was vacuumed
-(same contract as upsert.py/rollup.py/neardedup.py). The contract's
-one residual hole is shared too: a crash in the marker->fingerprint
-window leaves that token marker-committed but ledger-less ("legacy"),
-so a later fresh-checkpoint collision there is silently skipped like
-pre-ledger state — deliberate, because healing the ledger from a
-replay's own content could record a colliding fingerprint and wedge
-the original checkpoint (neardedup.py's marker-hit comment; ADVICE
-r10).
+Commits, replays and fresh-checkpoint collisions follow the
+versioned-sink protocol in ``streaming/fingerprint.py``: version dir
+and manifest are written BEFORE the marker, replays deterministically
+overwrite both, and readers resolve only committed manifests. Read
+amplification (latest snapshot stitches buckets from several
+versions) is bounded by ``compact_partitioned``; vacuum deletes marker
+FIRST, then manifest, then data — a crash mid-vacuum leaves invisible
+orphans, never a committed id whose manifest is gone.
 
 Reference parity: generalizes the reference's overwrite-everything
 staging (verizon_table_migration_Rakesh_filters.py:187-223) into
@@ -71,7 +57,6 @@ from __future__ import annotations
 
 import json
 import posixpath
-import re
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, functions as F
@@ -79,10 +64,16 @@ from pyspark.sql.streaming import StreamingQuery
 
 from oracle_cassandra_migrator_spark.operators.merge import merge_upsert
 from oracle_cassandra_migrator_spark.reliability.state import (
-    LocalFSStateStore,
     StateStore,
+    default_store,
 )
 from oracle_cassandra_migrator_spark.streaming import fingerprint
+from oracle_cassandra_migrator_spark.streaming.fingerprint import (
+    committed_tokens,
+    read_text,
+    token_key,
+    write_text,
+)
 
 __all__ = [
     "foreach_batch_upsert_partitioned",
@@ -95,61 +86,12 @@ __all__ = [
     "vacuum_partitioned",
 ]
 
-_TOKEN_MARKER_RE = re.compile(r"batch-(\d+(?:c\d+)?)\.marker$")
-
-
-def _token_key(tok: str) -> tuple[int, int]:
-    """Sort key: stream batch "7" = (7, 0); compaction "7c2" = (7, 2)
-    — after its base batch, before the next one."""
-    base, _, suf = tok.partition("c")
-    return (int(base), int(suf) if suf else 0)
-
-
-def _committed_tokens(store: StateStore, marker_dir: str) -> list[str]:
-    out = []
-    for key in store.list(marker_dir, suffix=".marker"):
-        m = _TOKEN_MARKER_RE.search(key)
-        if m:
-            out.append(m.group(1))
-    return sorted(out, key=_token_key)
-
-
-# Manifests are tiny JSON objects; go through the Hadoop FileSystem
-# API so any scheme (file:/hdfs:/s3a:) works — vacuum_snapshots's
-# convention.
-def _hadoop_fs(spark, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(conf), jpath
-
-
-def _write_text(spark, path: str, text: str) -> None:
-    fs, jpath = _hadoop_fs(spark, path)
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _read_text(spark, path: str) -> str:
-    fs, jpath = _hadoop_fs(spark, path)
-    stream = fs.open(jpath)
-    try:
-        jvm = spark.sparkContext._jvm
-        return jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8")
-    finally:
-        stream.close()
-
-
 def _manifest_path(base_dir: str, token: str) -> str:
     return posixpath.join(base_dir, f"manifest-v{token}.json")
 
 
 def _read_manifest(spark, base_dir: str, token: str) -> dict:
-    m = json.loads(_read_text(spark, _manifest_path(base_dir, token)))
+    m = json.loads(read_text(spark, _manifest_path(base_dir, token)))
     m["owners"] = {int(k): str(v) for k, v in m["owners"].items()}
     return m
 
@@ -162,7 +104,7 @@ def _write_manifest(spark, base_dir: str, token: str,
            "owners": {str(k): v for k, v in owners.items()}}
     if schema_ddl is not None:
         doc["schema"] = schema_ddl
-    _write_text(spark, _manifest_path(base_dir, token), json.dumps(doc))
+    write_text(spark, _manifest_path(base_dir, token), json.dumps(doc))
 
 
 def _schema_ddl(schema) -> str:
@@ -255,9 +197,9 @@ def latest_partitioned_snapshot(
     latest manifest. None before the first commit (or if the snapshot
     is empty). Readers never see uncommitted version dirs or
     manifests — commits are marker-gated, the upsert invariant."""
-    store = state or LocalFSStateStore()
-    tokens = _committed_tokens(
-        store, posixpath.join(base_dir, "markers"))
+    tokens = committed_tokens(
+        state or default_store(spark, base_dir),
+        posixpath.join(base_dir, "markers"))
     if not tokens:
         return None
     manifest = _read_manifest(spark, base_dir, tokens[-1])
@@ -280,9 +222,9 @@ def lookup_keys(spark, base_dir: str, keys: list[str],
     None before the first commit / on an empty table; a probe whose
     buckets hold no data returns an EMPTY frame (same schema), not
     None."""
-    store = state or LocalFSStateStore()
-    tokens = _committed_tokens(
-        store, posixpath.join(base_dir, "markers"))
+    tokens = committed_tokens(
+        state or default_store(spark, base_dir),
+        posixpath.join(base_dir, "markers"))
     if not tokens:
         return None
     manifest = _read_manifest(spark, base_dir, tokens[-1])
@@ -333,82 +275,27 @@ def _partitioned_applier(
     base_dir: str,
     keys: list[str],
     n_buckets: int,
-    store: StateStore,
+    state: StateStore | None,
     merge_fn: Callable[[DataFrame, DataFrame | None], DataFrame],
     batch_prep: Callable[[DataFrame], DataFrame],
-    bucket_source: str,
 ):
-    """The shared version/manifest/marker protocol for both
-    partitioned maintainers — one body, so a protocol fix cannot land
-    in one twin and miss the other. ``batch_prep`` turns the raw batch
-    into the frame that both picks the touched buckets and feeds
-    ``merge_fn(prepped, current_or_None)``; ``bucket_source`` is
-    "prepped" when touched buckets come from the prepped frame's keys
-    (both maintainers)."""
-    marker_dir = posixpath.join(base_dir, "markers")
+    """The version/manifest write shared by both partitioned
+    maintainers — one body, so a fix cannot land in one twin and miss
+    the other. ``batch_prep`` turns the raw batch into the frame that
+    both picks the touched buckets and feeds
+    ``merge_fn(prepped, current_or_None)``."""
     bexpr = _bucket_expr(keys, n_buckets)
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        # persist ACROSS the fingerprint aggregate and batch_prep: the
-        # fp job materializes the cache, so prepped below reads the
-        # cached batch instead of re-running the source scan +
-        # upstream transforms (ADVICE r10; pinned by
-        # tests/test_fingerprint_scan_once.py)
-        batch_df = batch_df.persist()
-        try:
-            _apply_once(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _apply_once(batch_df: DataFrame, batch_id: int) -> None:
-        token = str(batch_id)
-        marker = posixpath.join(marker_dir, f"batch-{token}.marker")
+    def write(batch_df: DataFrame, token: str,
+              all_tokens: list[str]) -> bool:
         spark = batch_df.sparkSession
-        # one map-side aggregate job; also the required batch
-        # consumption on every skip path (replaces the separate
-        # consume_without_writing pass) — see streaming/fingerprint.py
-        fp = fingerprint.batch_fingerprint(batch_df)
-        if store.exists(marker):
-            # committed-marker hit: replay vs fresh-checkpoint
-            # collision decided by CONTENT, never by silent skip;
-            # skip and legacy both return (pre-ledger markers keep
-            # the old skip)
-            fingerprint.decide_replay(
-                spark, store, base_dir, token, fp,
-                f"batch {batch_id} carries a committed marker at "
-                f"{base_dir!r} but its content fingerprint does not "
-                "match the committed one — a fresh-checkpoint run is "
-                "reusing a committed batch id over the same base_dir, "
-                "and skipping it would silently drop its changes. "
-                "Resume the original checkpoint, use a new base_dir, "
-                "or clear the state first.")
-            return
-        all_tokens = _committed_tokens(store, marker_dir)
-        if all_tokens and _token_key(token) < _token_key(all_tokens[-1]):
-            # a version below the latest committed token is INVISIBLE
-            # (readers resolve the latest manifest) and reclaimed by
-            # the next vacuum: skip a vacuumed-marker true replay
-            # exactly, refuse new content at a stale id, let legacy
-            # pre-ledger tokens keep the old behavior
-            if fingerprint.decide_replay(
-                    spark, store, base_dir, token, fp,
-                    f"partitioned state at {base_dir!r} is committed "
-                    f"through token {all_tokens[-1]!r}, but this "
-                    f"stream is writing batch {batch_id} with "
-                    "DIFFERENT content than originally committed "
-                    "there — a fresh-checkpoint run over the same "
-                    "base_dir. Its version would be invisible to "
-                    "reads and reclaimed by the next vacuum (silent "
-                    "data loss). Resume the original checkpoint, use "
-                    "a new base_dir, or clear the state first.") == "skip":
-                return
         # persisted: the touched-bucket collect AND the merge/write
         # both consume it — without this the batch aggregation and
         # source scan run twice per trigger
         prepped = batch_prep(batch_df).persist()
         try:
             prev = [t for t in all_tokens
-                    if _token_key(t) < (batch_id, 0)]
+                    if token_key(t) < token_key(token)]
             if prev:
                 manifest = _read_manifest(spark, base_dir, prev[-1])
                 _check_manifest(manifest, n_buckets, keys)
@@ -459,13 +346,11 @@ def _partitioned_applier(
                     new_owners.pop(b, None)
             _write_manifest(spark, base_dir, token, n_buckets, keys,
                             new_owners, schema_ddl)
-            store.put_marker(marker)
-            # fingerprint LAST: presence proves the marker committed
-            store.put_marker(fingerprint.fp_key(base_dir, token, fp))
         finally:
             prepped.unpersist()
+        return True
 
-    return apply
+    return fingerprint.versioned_applier(base_dir, state, write)
 
 
 def make_upsert_applier(
@@ -479,8 +364,6 @@ def make_upsert_applier(
     callable — what foreach_batch_upsert_partitioned hands to
     foreachBatch, exposed so tests (and batch backfills) can drive the
     protocol synchronously without streaming machinery."""
-    store = state or LocalFSStateStore()
-
     def prep(batch_df: DataFrame) -> DataFrame:
         ordered = F.struct(
             *[F.col(c) for c in order_by], F.struct("*").alias("__row"))
@@ -501,7 +384,7 @@ def make_upsert_applier(
         return merge_upsert(current, winners, keys, allow_missing=True)
 
     return _partitioned_applier(
-        base_dir, keys, n_buckets, store, merge, prep, "prepped")
+        base_dir, keys, n_buckets, state, merge, prep)
 
 
 def foreach_batch_upsert_partitioned(
@@ -523,10 +406,7 @@ def foreach_batch_upsert_partitioned(
     the manifest on every batch; re-bucketing is a new table)."""
     apply = make_upsert_applier(
         base_dir, keys, order_by, n_buckets=n_buckets, state=state)
-    writer = (stream.writeStream.foreachBatch(apply)
-              .option("checkpointLocation", checkpoint_dir))
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return fingerprint.start(stream, apply, checkpoint_dir, trigger)
 
 
 def make_rollup_applier(
@@ -547,8 +427,6 @@ def make_rollup_applier(
         maintain_sum_count,
     )
 
-    store = state or LocalFSStateStore()
-
     def prep(batch_df: DataFrame) -> DataFrame:
         return cdc_to_group_deltas(
             batch_df, keys, new_expr, old_expr, op_col=op_col)
@@ -566,7 +444,7 @@ def make_rollup_applier(
             base, deltas, keys, n_col=n_col, sum_col=sum_col)
 
     return _partitioned_applier(
-        base_dir, keys, n_buckets, store, merge, prep, "prepped")
+        base_dir, keys, n_buckets, state, merge, prep)
 
 
 def foreach_batch_rollup_partitioned(
@@ -596,10 +474,7 @@ def foreach_batch_rollup_partitioned(
     apply = make_rollup_applier(
         base_dir, keys, new_expr, old_expr, n_buckets=n_buckets,
         n_col=n_col, sum_col=sum_col, op_col=op_col, state=state)
-    writer = (stream.writeStream.foreachBatch(apply)
-              .option("checkpointLocation", checkpoint_dir))
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return fingerprint.start(stream, apply, checkpoint_dir, trigger)
 
 
 def compact_partitioned(spark, base_dir: str,
@@ -614,15 +489,14 @@ def compact_partitioned(spark, base_dir: str,
     every row). Same write-then-marker commit discipline; a crashed
     compaction is an invisible orphan and a rerun deterministically
     overwrites it. Returns the new token."""
-    store = state or LocalFSStateStore()
-    marker_dir = posixpath.join(base_dir, "markers")
-    tokens = _committed_tokens(store, marker_dir)
+    store = state or default_store(spark, base_dir)
+    tokens = committed_tokens(store, posixpath.join(base_dir, "markers"))
     if not tokens:
         raise ValueError("nothing to compact: no committed versions")
     manifest = _read_manifest(spark, base_dir, tokens[-1])
     owners = manifest["owners"]
     keys = manifest["keys"]
-    base, suf = _token_key(tokens[-1])
+    base, suf = token_key(tokens[-1])
     new_token = f"{base}c{suf + 1}"
     if owners:
         current = _read_buckets(
@@ -645,8 +519,7 @@ def compact_partitioned(spark, base_dir: str,
         schema_ddl = _schema_ddl(current.schema)
     _write_manifest(spark, base_dir, new_token, manifest["n_buckets"],
                     keys, new_owners, schema_ddl)
-    store.put_marker(
-        posixpath.join(marker_dir, f"batch-{new_token}.marker"))
+    store.put_marker(fingerprint.marker_key(base_dir, new_token))
     return new_token
 
 
@@ -662,9 +535,8 @@ def vacuum_partitioned(spark, base_dir: str, keep_last: int = 2,
     every later vacuum/read)."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    store = state or LocalFSStateStore()
-    marker_dir = posixpath.join(base_dir, "markers")
-    tokens = _committed_tokens(store, marker_dir)
+    store = state or default_store(spark, base_dir)
+    tokens = committed_tokens(store, posixpath.join(base_dir, "markers"))
     kept = tokens[-keep_last:]
     referenced: set[str] = set()
     for t in kept:
@@ -672,15 +544,9 @@ def vacuum_partitioned(spark, base_dir: str, keep_last: int = 2,
             _read_manifest(spark, base_dir, t)["owners"].values())
     doomed = [t for t in tokens[:-keep_last] if t not in referenced]
     for tok in doomed:
-        store.delete(
-            posixpath.join(marker_dir, f"batch-{tok}.marker"))
-        fs, jm = _hadoop_fs(spark, _manifest_path(base_dir, tok))
-        if fs.exists(jm):
-            fs.delete(jm, False)
-        _, jd = _hadoop_fs(
-            spark, posixpath.join(base_dir, f"v{tok}"))
-        if fs.exists(jd):
-            fs.delete(jd, True)
+        store.delete(fingerprint.marker_key(base_dir, tok))
+        fingerprint.delete_tree(spark, _manifest_path(base_dir, tok))
+        fingerprint.delete_tree(spark, posixpath.join(base_dir, f"v{tok}"))
     if doomed and kept:
         # fingerprints of vacuumed tokens survive (they decide
         # vacuumed-marker replays exactly); merge their singles into
@@ -688,6 +554,6 @@ def vacuum_partitioned(spark, base_dir: str, keep_last: int = 2,
         boundary = kept[0]
         fingerprint.compact_fingerprints(
             spark, store, base_dir,
-            lambda bid: _token_key(bid) < _token_key(boundary),
+            lambda bid: token_key(bid) < token_key(boundary),
             boundary)
     return doomed

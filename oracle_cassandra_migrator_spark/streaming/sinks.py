@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from oracle_cassandra_migrator_spark.reliability.state import (
-    LocalFSStateStore,
     StateStore,
+    default_store,
 )
 from oracle_cassandra_migrator_spark.sinks.writers import (
     WRITE_PATH_FORMATS,
@@ -64,9 +64,9 @@ def make_idempotent_writer(
     exactly-once write, instead of re-implementing it. Marker check
     comes FIRST, so a replayed batch skips the caller's (lazy) plan
     entirely."""
-    store = state or LocalFSStateStore()
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        store = state or default_store(batch_df.sparkSession, marker_dir)
         marker = os.path.join(marker_dir, f"batch-{batch_id}.marker")
         if store.exists(marker):
             # replayed batch: execute (feeds upstream state), skip write

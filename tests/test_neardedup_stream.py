@@ -432,7 +432,10 @@ def test_true_replay_skipped_even_when_band_cap_crossed(spark, tmp_path):
     crash-recovery replay, wedging the stream permanently. The content
     fingerprint decides exactly: same id + same content = skip,
     regardless of what the state's band groups look like now."""
-    from oracle_cassandra_migrator_spark.streaming import neardedup
+    from oracle_cassandra_migrator_spark.reliability.state import (
+        LocalFSStateStore)
+    from oracle_cassandra_migrator_spark.streaming import (
+        fingerprint, neardedup)
 
     base_dir = str(tmp_path / "state")
     b0 = _mk_docs(spark, [(1, BASE)])
@@ -458,10 +461,10 @@ def test_true_replay_skipped_even_when_band_cap_crossed(spark, tmp_path):
     empty.write.mode("overwrite").parquet(f"{base_dir}/sigs-v1")
     neardedup.band_rows(empty, "doc_id").write.mode(
         "overwrite").parquet(f"{base_dir}/bands-v1")
-    store = neardedup.LocalFSStateStore()
+    store = LocalFSStateStore()
     for bid, bdf in ((0, b0), (1, b1)):
         store.put_marker(f"{base_dir}/markers/batch-{bid}.marker")
-        store.put_marker(neardedup._fp_key(
+        store.put_marker(fingerprint.fp_key(
             base_dir, bid,
             neardedup._batch_fingerprint(bdf, "text", "doc_id")))
 

@@ -584,7 +584,8 @@ def test_legacy_manifest_schema_recovered_not_narrowed(spark, tmp_path):
     union, so legacy columns stay visible (r8 review finding)."""
     import json as _json
 
-    from oracle_cassandra_migrator_spark.streaming import partitioned
+    from oracle_cassandra_migrator_spark.streaming import (
+        fingerprint, partitioned)
 
     base = str(tmp_path / "part")
     apply = partitioned.make_upsert_applier(
@@ -595,7 +596,7 @@ def test_legacy_manifest_schema_recovered_not_narrowed(spark, tmp_path):
     m = _json.loads(open(mpath).read())
     assert m.pop("schema", None) is not None
     # go through the Hadoop FS writer so the sidecar .crc stays valid
-    partitioned._write_text(spark, mpath, _json.dumps(m))
+    fingerprint.write_text(spark, mpath, _json.dumps(m))
 
     # a batch WITHOUT the v column, touching only its own bucket
     apply(spark.createDataFrame([(424242, 999)], "k BIGINT, seq INT"), 1)

@@ -97,6 +97,29 @@ def test_pipeline_on_uri_paths_with_hadoop_state(spark, tmp_path):
     assert spark.read.parquet(f"file://{tmp_path}/sink").count() == n
 
 
+def test_run_pipelines_on_uri_paths_without_state(spark, tmp_path):
+    """No ``state`` passed: scheme-qualified staging and sink paths
+    must get a store that can see them (the --from-reference default
+    is ``s3a://`` staging). The local-FS store reads ``file://`` keys
+    as missing, so the sink phase would list zero staged files and
+    every rerun would re-stage."""
+    spec = make_spec(tmp_path)
+    spec["staging_dir"] = f"file://{tmp_path}/staging"
+    spec["sink"]["path"] = f"file://{tmp_path}/sink"
+    config = {"tables": [spec]}
+
+    [r1] = run_pipelines(spark, config)
+    assert r1.files_written >= 1
+    n = spark.read.parquet(f"file://{tmp_path}/sink").count()
+    assert n > 0
+
+    [r2] = run_pipelines(spark, config)
+    assert r2.phases_run == ["sink"]
+    assert r2.files_written == 0
+    assert r2.files_skipped == r1.files_written
+    assert spark.read.parquet(f"file://{tmp_path}/sink").count() == n
+
+
 def test_sink_output_matches_direct_query(spark, tmp_path):
     spec = make_spec(tmp_path)
     Pipeline(spark, spec, LocalFSStateStore()).run()

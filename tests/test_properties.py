@@ -570,8 +570,8 @@ def test_live_tokens_is_suffix_from_last_compaction(batches, compactions):
     invariant read_state/compact/vacuum all rest on."""
     from oracle_cassandra_migrator_spark.streaming.neardedup import (
         _live_tokens)
-    from oracle_cassandra_migrator_spark.streaming.partitioned import (
-        _token_key)
+    from oracle_cassandra_migrator_spark.streaming.fingerprint import (
+        token_key as _token_key)
 
     tokens = sorted(
         [str(b) for b in batches]

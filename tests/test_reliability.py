@@ -93,71 +93,3 @@ class TestStateStore:
         assert not store.output_committed(str(out))
         (out / "_SUCCESS").write_text("")
         assert store.output_committed(str(out))
-
-
-class FakeS3Client:
-    """Minimal in-memory stand-in for boto3's S3 client (no boto3 in
-    this environment)."""
-
-    class exceptions:
-        class ClientError(Exception):
-            pass
-
-    def __init__(self):
-        self.objects = {}
-
-    def head_object(self, Bucket, Key):
-        if (Bucket, Key) not in self.objects:
-            raise self.exceptions.ClientError("404")
-
-    def put_object(self, Bucket, Key, Body=b""):
-        self.objects[(Bucket, Key)] = Body
-
-    def delete_object(self, Bucket, Key):
-        self.objects.pop((Bucket, Key), None)
-
-    def get_paginator(self, name):
-        assert name == "list_objects_v2"
-        objects = self.objects
-
-        class P:
-            def paginate(self, Bucket, Prefix):
-                contents = [
-                    {"Key": k} for (b, k) in sorted(objects)
-                    if b == Bucket and k.startswith(Prefix)
-                ]
-                yield {"Contents": contents}
-
-        return P()
-
-
-class TestS3StateStore:
-    def make(self):
-        from oracle_cassandra_migrator_spark.reliability.state import (
-            S3StateStore,
-        )
-
-        return S3StateStore(client=FakeS3Client())
-
-    def test_marker_roundtrip(self):
-        store = self.make()
-        key = "s3://bucket/staging/part-0.parquet.checkpoint"
-        assert not store.exists(key)
-        store.put_marker(key)
-        assert store.exists(key)
-        store.delete(key)
-        assert not store.exists(key)
-
-    def test_list_with_suffix(self):
-        store = self.make()
-        store.put_marker("s3://b/staging/a.parquet")
-        store.put_marker("s3://b/staging/b.parquet")
-        store.put_marker("s3://b/staging/b.parquet.checkpoint")
-        assert store.list("s3://b/staging/", suffix=".parquet") == [
-            "s3://b/staging/a.parquet", "s3://b/staging/b.parquet"]
-
-    def test_output_committed(self):
-        store = self.make()
-        assert not store.output_committed("s3://b/staged/table")
-        store.put_marker("s3://b/staged/table/_SUCCESS")
-        assert store.output_committed("s3://b/staged/table")
